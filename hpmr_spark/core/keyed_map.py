@@ -10,9 +10,13 @@ Spark-first design notes
   combine-on-insert + shuffle-merge pipeline (src/bare_map.h:55-57 +
   src/dist_map.h:147-210) — with zero custom code.
 * ``async_set``/``sync`` (src/dist_map.h:118-130,147-210) collapse into the
-  epoch model: writes accumulate in a pending batch; ``sync()`` unions pending
-  into state and re-aggregates. Spark's lazy execution means the shuffle runs
-  when an action fires; ``sync`` additionally persists to cap lineage.
+  epoch model: ``set_batch`` unions a batch of writes into the state and
+  re-aggregates. It only builds a plan; the shuffle runs when an action
+  fires. Each epoch adds one union + aggregate to the lineage, so call
+  ``checkpoint()`` every ~25 epochs to cut it.
+* After any ``sync`` the state is ``(key, value)``. An order column exists
+  only while ingesting (``from_pairs`` arrival order, ``from_df``'s
+  ``order_col``) and for the one merge of a keep/overwrite epoch.
 * Point ops (``get``/``has``/``unset`` — src/dist_map.h:132-145,
   src/concurrent_map.h:46-52) are filters / semi / anti joins, so at cluster
   scale they stay distributed; ``get`` collects a single row to the driver,
@@ -47,16 +51,11 @@ class KeyedMap:
 
     def __init__(self, df: DataFrame, *, _has_order: bool = False, _unique: bool = True):
         self._df = df
-        self._has_order = _has_order
+        self._has_order = _has_order  # df carries ORDER (only before a sync)
         self._unique = _unique  # True once the ≤1-row-per-key invariant holds
-        self._epoch = 0
-        # Driver-side cache of max(_order). Without it every set_batch epoch
-        # embedded the CURRENT plan twice (union side + broadcast max-order
-        # agg side), doubling the logical plan per epoch — exponential
-        # lineage growth, caught by tests/test_epoch_stress.py. With it the
-        # first epoch runs one 1-row agg job and every later epoch is a
-        # pure driver-side increment (our own batch order IS the new max).
-        self._max_order: int | None = None
+
+    def _derive(self, df: DataFrame) -> "KeyedMap":
+        return KeyedMap(df, _has_order=self._has_order, _unique=self._unique)
 
     # ------------------------------------------------------------- construction
     @classmethod
@@ -92,61 +91,47 @@ class KeyedMap:
         """Merge duplicate keys — THE shuffle (src/dist_map.h:147-210).
 
         Canned reducers run as JVM agg expressions (partial+final agg); custom
-        reducers run via RDD.reduceByKey (still map-side combined)."""
+        reducers run via RDD.reduceByKey (still map-side combined). The
+        result is ``(key, value)``: the order column is consumed here."""
         if self._unique:
             return self
         if reducer.agg_factory is None:
-            # arbitrary Python merge → RDD path (order column dropped)
             rdd = self._df.select(KEY, VALUE).rdd.map(tuple).reduceByKey(reducer.fn)
-            return KeyedMap(rdd.toDF([KEY, VALUE]), _has_order=False, _unique=True)
-        aggs = [reducer.agg(VALUE, ORDER if self._has_order else None).alias(VALUE)]
-        if self._has_order:
-            aggs.append(F.max(ORDER).alias(ORDER))
-        out = self._df.groupBy(KEY).agg(*aggs)
-        return KeyedMap(out, _has_order=self._has_order, _unique=True)
+            return KeyedMap(rdd.toDF([KEY, VALUE]))
+        agg = reducer.agg(VALUE, ORDER if self._has_order else None)
+        return KeyedMap(self._df.groupBy(KEY).agg(agg.alias(VALUE)))
 
     def set_batch(
         self, batch: DataFrame, key_col: str, value_col: str, reducer: _Reducer = Reducer.overwrite
     ) -> "KeyedMap":
         """async_set epoch: union a batch of writes, merge on key
-        (src/dist_map.h:118-130). New rows get a later epoch order so
-        ``overwrite`` means "batch wins over existing state"."""
-        if self._has_order:
-            # Batch order must exceed EVERY existing order, including
-            # user-supplied order_col values from from_df (e.g. epoch-micros
-            # timestamps ~1.7e15) — a fixed (epoch+1)·2^40 base silently
-            # loses to those. The max is computed ONCE (1-row agg job) and
-            # cached driver-side; afterwards each epoch increments it — our
-            # own batch literal IS the new max, so no re-derivation. This
-            # keeps the per-epoch plan growth LINEAR: deriving the base as a
-            # crossJoin(broadcast(agg(cur))) embedded cur's plan twice per
-            # epoch and doubled the logical plan every set_batch
-            # (exponential — tests/test_epoch_stress.py is the sentinel).
-            cur = self._df
-            if self._max_order is None:
-                row = cur.agg(
-                    F.coalesce(F.max(ORDER), F.lit(0)).cast("long").alias("m")
-                ).collect()
-                self._max_order = int(row[0]["m"])
-            base = self._max_order + 1
-            nxt = _normalize(batch, key_col, value_col, None).withColumn(
-                ORDER, F.lit(base).cast("long")
-            )
-        else:
-            cur = self._df.withColumn(ORDER, F.lit(0).cast("long"))
-            base = 1
-            nxt = _normalize(batch, key_col, value_col, None).withColumn(
-                ORDER, F.lit(base).cast("long")
-            )
-        merged = KeyedMap(cur.unionByName(nxt), _has_order=True, _unique=False).sync(reducer)
-        merged._epoch = self._epoch + 1
-        merged._max_order = base  # sync keeps max(_order) = the batch epoch
-        return merged
+        (src/dist_map.h:118-130). Builds a plan only; no Spark job runs.
+
+        The state holds one row per key, so keep/overwrite need only the
+        state-versus-batch order: state rows are tagged 0 and batch rows 1
+        for this one merge, and ``overwrite`` means "batch wins over
+        existing state". Ties between duplicate keys inside one batch are
+        arbitrary. A non-unique state is synced with ``reducer`` first."""
+        # The state is not co-partitioned with the batch, so every epoch
+        # re-shuffles it. Two measurements on Spark 4.1 rule that out for
+        # now: localCheckpoint under AQE reports UnknownPartitioning(0), so
+        # the next union re-shuffles the state anyway; and repartition(n,
+        # key) on the batch with no exchange between epochs pipelines every
+        # epoch's hash aggregate into one stage, which failed with
+        # UNABLE_TO_ACQUIRE_MEMORY at ~9 stacked epochs.
+        cur = self.sync(reducer)._df
+        nxt = _normalize(batch, key_col, value_col, None)
+        if reducer.needs_order:
+            cur = cur.withColumn(ORDER, F.lit(0))
+            nxt = nxt.withColumn(ORDER, F.lit(1))
+        merged = KeyedMap(cur.unionByName(nxt), _has_order=reducer.needs_order, _unique=False)
+        return merged.sync(reducer)
 
     # ------------------------------------------------------------- point ops
     def get(self, key: Any, default: Any = None) -> Any:
-        """Point lookup with default (src/dist_map.h:132-145)."""
-        row = self._df.where(F.col(KEY) == F.lit(key)).select(VALUE).take(1)
+        """Point lookup with default (src/dist_map.h:132-145). Null-safe:
+        a ``None`` key is a key like any other."""
+        row = self._df.where(F.col(KEY).eqNullSafe(F.lit(key))).select(VALUE).take(1)
         return row[0][0] if row else default
 
     def get_many(self, keys: list) -> dict:
@@ -159,24 +144,16 @@ class KeyedMap:
 
     def has(self, key: Any) -> bool:
         """Membership (src/bare_hash_container.h:181-196)."""
-        return bool(self._df.where(F.col(KEY) == F.lit(key)).take(1))
+        return bool(self._df.where(F.col(KEY).eqNullSafe(F.lit(key))).take(1))
 
     def unset(self, key: Any) -> "KeyedMap":
         """Delete one key (src/bare_hash_container.h:150-179)."""
-        return KeyedMap(
-            self._df.where(F.col(KEY) != F.lit(key)),
-            _has_order=self._has_order,
-            _unique=self._unique,
-        )
+        return self._derive(self._df.where(~F.col(KEY).eqNullSafe(F.lit(key))))
 
     def unset_many(self, keys_df: DataFrame, key_col: str) -> "KeyedMap":
         """Bulk delete = left-anti join (distributed, no driver loop)."""
         other = keys_df.select(F.col(key_col).alias(KEY))
-        return KeyedMap(
-            self._df.join(other, on=KEY, how="left_anti"),
-            _has_order=self._has_order,
-            _unique=self._unique,
-        )
+        return self._derive(self._df.join(other, on=KEY, how="left_anti"))
 
     # ---------------------------------------------------------------- metadata
     def n_keys(self) -> int:
@@ -236,15 +213,11 @@ class KeyedMap:
 
     def reserve(self, n_partitions: int) -> "KeyedMap":
         """Pre-size partitioning (src/dist_map.h:82-88): hash-repartition on key."""
-        return KeyedMap(
-            self._df.repartition(n_partitions, KEY),
-            _has_order=self._has_order,
-            _unique=self._unique,
-        )
+        return self._derive(self._df.repartition(n_partitions, KEY))
 
     def clear(self) -> "KeyedMap":
         """Drop all entries (src/dist_map.h:243-253)."""
-        return KeyedMap(self._df.limit(0), _has_order=self._has_order, _unique=True)
+        return KeyedMap(self._df.select(KEY, VALUE).limit(0))
 
     # ------------------------------------------------------------ full scans
     def for_each(self, handler: Callable[[Any, Any], None]) -> None:

@@ -76,6 +76,51 @@ def test_get_default_and_has_unset(spark):
     assert not km2.has("x") and km2.n_keys() == 1
 
 
+def test_point_ops_null_key(spark):
+    # A None key is a key like any other: get/has find it, and unsetting
+    # another key leaves it in place.
+    km = KeyedMap.from_pairs(spark, [(None, 5), (1, 10), (2, 20)])
+    assert km.get(None) == 5 and km.has(None)
+    assert dict(km.unset(1).items()) == {None: 5, 2: 20}
+    assert dict(km.unset(None).items()) == {1: 10, 2: 20}
+
+
+def test_set_batch_launches_no_job(spark):
+    # set_batch only builds a plan, whatever map it starts from. Each
+    # epoch runs in its own job group so its jobs can be counted.
+    sc = spark.sparkContext
+    batch = spark.createDataFrame([(1, 5), (7, 1)], "k long, v long")
+    gone = spark.createDataFrame([(2,)], "k long")
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    km = KeyedMap.from_pairs(spark, [(i, i) for i in range(4)], Reducer.sum)
+    derived = [
+        ("from_pairs", lambda m: m),
+        ("unset_many", lambda m: m.unset_many(gone, "k")),
+        ("unset", lambda m: m.unset(3)),
+        ("reserve", lambda m: m.reserve(3)),
+        ("checkpoint", lambda m: m.checkpoint()),
+    ]
+    for name, derive in derived:
+        km = derive(km)
+        for reducer in (Reducer.overwrite, Reducer.sum):
+            group = f"set_batch_after_{name}_{reducer.name}"
+            out, n_jobs = jobs_of(group, lambda: km.set_batch(batch, "k", "v", reducer))
+            assert n_jobs == 0, f"{group} launched {n_jobs} job(s)"
+            assert out.df.columns == ["key", "value"]
+        km = out
+    # The count is real: an action in a group is seen.
+    n, n_jobs = jobs_of("set_batch_probe_action", km.n_keys)
+    assert n == 3 and n_jobs > 0  # keys 0, 1, 7
+
+
 def test_get_many_batched(spark):
     km = KeyedMap.from_pairs(spark, [(i, i * i) for i in range(100)])
     got = km.get_many([3, 7, 200])
@@ -94,8 +139,8 @@ def test_set_batch_epoch_merge(spark):
 
 def test_set_batch_beats_user_order_col(spark):
     # A map built via from_df with a real-world order column (epoch-micros
-    # scale, ≫ 2^40) must still let set_batch's overwrite win: the batch
-    # order is derived from max(existing)+1, not a fixed epoch base.
+    # scale, ≫ 2^40) must still let set_batch's overwrite win: the epoch
+    # merge tags state rows 0 and batch rows 1, whatever the ingest order.
     big = 1_700_000_000_000_000  # epoch-micros ballpark
     src = spark.createDataFrame(
         [("a", 1, big), ("a", 2, big + 5), ("b", 7, big)], ["k", "v", "ord"]

@@ -55,8 +55,8 @@ def test_epoch_lineage_stress_100(spark):
         f"lineage grew across checkpoints: first stretch {first} B, "
         f"last stretch {last} B — checkpoint() is not cutting lineage"
     )
-    # And the checkpointed plan is small in absolute terms (a scan +
-    # epoch bookkeeping, not 100 epochs of unions).
+    # And the checkpointed plan is small in absolute terms (a scan, not
+    # 100 epochs of unions).
     assert last < 20_000, f"post-checkpoint plan unexpectedly large: {last} B"
 
 

@@ -8,6 +8,12 @@ from collections import defaultdict
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    rule,
+    run_state_machine_as_test,
+)
 
 from hpmr_spark import KeyedMap, Reducer
 
@@ -57,6 +63,93 @@ def test_epoch_lineage_stress(spark):
             km = km.checkpoint()
     got = dict(km.items())
     assert got == dict(expect)
+
+
+# ---------------------------------------------------------------------------
+# Randomized KeyedMap operation sequences against a dict model.
+# ---------------------------------------------------------------------------
+
+_KEYS = st.integers(0, 3)
+_PAIRS = st.tuples(_KEYS, st.integers(-100, 100))
+_MERGE = {"sum": lambda a, b: a + b, "min": min, "max": max}
+
+
+def _apply(model, name, pairs):
+    """Merge pairs into the dict model in arrival order."""
+    for k, v in pairs:
+        if k not in model or name == "overwrite":
+            model[k] = v
+        elif name != "keep":
+            model[k] = _MERGE[name](model[k], v)
+
+
+class KeyedMapMachine(RuleBasedStateMachine):
+    spark = None  # bound by the test below
+
+    @initialize(
+        pairs=st.lists(_PAIRS, min_size=1, max_size=8),
+        name=st.sampled_from(["sum", "min", "max", "keep", "overwrite"]),
+    )
+    def ingest(self, pairs, name):
+        self.km = KeyedMap.from_pairs(self.spark, pairs, Reducer.by_name(name))
+        self.model = {}
+        _apply(self.model, name, pairs)
+
+    def _set_batch(self, pairs, name):
+        batch = self.spark.createDataFrame(pairs, "k long, v long")
+        self.km = self.km.set_batch(batch, "k", "v", Reducer.by_name(name))
+        _apply(self.model, name, pairs)
+
+    @rule(pairs=st.lists(_PAIRS, max_size=8), name=st.sampled_from(["sum", "min", "max"]))
+    def set_batch_merge(self, pairs, name):
+        self._set_batch(pairs, name)
+
+    # Ties between duplicate keys inside one batch are arbitrary under
+    # keep/overwrite, so those batches carry unique keys.
+    @rule(
+        pairs=st.lists(_PAIRS, max_size=6, unique_by=lambda p: p[0]),
+        name=st.sampled_from(["keep", "overwrite"]),
+    )
+    def set_batch_ordered(self, pairs, name):
+        self._set_batch(pairs, name)
+
+    @rule(key=_KEYS)
+    def unset(self, key):
+        self.km = self.km.unset(key)
+        self.model.pop(key, None)
+
+    @rule(keys=st.lists(_KEYS, max_size=3))
+    def unset_many(self, keys):
+        gone = self.spark.createDataFrame([(k,) for k in keys], "k long")
+        self.km = self.km.unset_many(gone, "k")
+        for k in keys:
+            self.model.pop(k, None)
+
+    @rule()
+    def checkpoint(self):
+        self.km = self.km.checkpoint()
+
+    @rule(keys=st.lists(_KEYS, max_size=4))
+    def get_many(self, keys):
+        expect = {k: self.model[k] for k in keys if k in self.model}
+        assert self.km.get_many(keys) == expect
+
+    @rule()
+    def items(self):
+        assert dict(self.km.items()) == self.model
+
+
+def test_keyed_map_state_machine(spark):
+    KeyedMapMachine.spark = spark
+    run_state_machine_as_test(
+        KeyedMapMachine,
+        settings=settings(
+            max_examples=10,
+            stateful_step_count=12,
+            deadline=None,
+            suppress_health_check=list(HealthCheck),
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
